@@ -10,9 +10,14 @@ submit/poll/paginate round-trips (SURVEY.md §3):
 - ``delete_tool(s_no)``        ← POST /deleteTool      (:1029-1035)
 
 State is a snapshot DataFrame; every mutation returns a NEW engine
-wrapping the post-state (persist-where-you-like). Status envelopes
-(200/201/400/404) become typed results. The wide ``csp_tools`` schema
-follows FIXTURES.md §F-A / sql/ddl_create_tables.sql:3-26.
+wrapping the post-state (persist-where-you-like). A mutation's
+post-state is the pre-state plus literals the call has already
+computed: ``create_tool`` assigns its key eagerly, and the ``s_no`` in
+its 201 is the key stored in the appended row. No later read
+re-derives it, and no engine plan has a Python-evaluated
+(``LogicalRDD``) leaf. Status envelopes (200/201/400/404) become
+typed results. The wide ``csp_tools`` schema follows FIXTURES.md §F-A
+/ sql/ddl_create_tables.sql:3-26.
 """
 
 from __future__ import annotations
@@ -52,14 +57,21 @@ class MutationResult:
     message: str = ""
 
 
+def _literal_rows(spark: SparkSession, n: int, values: dict) -> DataFrame:
+    """``n`` (0 or 1) rows of ``CSP_TOOLS_SCHEMA`` built from JVM
+    literals; fields missing from ``values`` are NULL."""
+    return spark.range(n, numPartitions=1).select(
+        *[
+            F.lit(values.get(f.name)).cast(f.dataType).alias(f.name)
+            for f in CSP_TOOLS_SCHEMA
+        ]
+    )
+
+
 class CspToolsEngine:
     def __init__(self, spark: SparkSession, table: DataFrame | None = None):
         self.spark = spark
-        self.table = (
-            table
-            if table is not None
-            else spark.createDataFrame([], CSP_TOOLS_SCHEMA)
-        )
+        self.table = table if table is not None else _literal_rows(spark, 0, {})
 
     # ------------------------------------------------------------ reads
 
@@ -121,20 +133,25 @@ class CspToolsEngine:
         """Insert with uniqueness guard + serial key: duplicate
         tool_name → 400 (check_And_Insert, lambda_function.py:342-352);
         else s_no = COALESCE(MAX,0)+1 — soft-deleted rows still count
-        toward MAX (:269-271) — and 201 with the assigned key."""
-        exists = (
-            self.table.filter(F.col("tool_name") == record["tool_name"]).limit(1).count()
-            > 0
-        )
-        if exists:
+        toward MAX (:269-271) — and 201 with the assigned key. One
+        aggregate action computes both the key and the duplicate probe;
+        the post-state appends the new row as literals."""
+        name = record.get("tool_name")
+        if name is None:
+            raise ValueError("create_tool: record needs a non-null tool_name")
+        probe = self.table.agg(
+            (F.coalesce(F.max("s_no"), F.lit(0)) + 1).alias("next_key"),
+            F.bool_or(F.col("tool_name") == F.lit(name)).alias("exists"),
+        ).head()
+        if probe["exists"]:
             return MutationResult(400, self, message="tool_name already exists")
-        new_row = {f.name: record.get(f.name) for f in CSP_TOOLS_SCHEMA.fields}
-        new_row["s_no"] = 0  # placeholder; assign_serial_keys overwrites
-        new_row["is_display"] = True
-        new_df = self.spark.createDataFrame([new_row], CSP_TOOLS_SCHEMA)
-        merged = M.insert_with_serial_keys(self.table, new_df, "s_no")
-        assigned = merged.agg(F.max("s_no")).head()[0]
-        return MutationResult(201, CspToolsEngine(self.spark, merged), s_no=int(assigned))
+        key = int(probe["next_key"])
+        new_row = _literal_rows(
+            self.spark, 1, {**record, "s_no": key, "is_display": True}
+        )
+        return MutationResult(
+            201, CspToolsEngine(self.spark, self.table.unionByName(new_row)), s_no=key
+        )
 
     def update_tool(self, s_no: int, updates: dict) -> MutationResult:
         """Guarded keyed update: absent key → 404 (check_And_Update,

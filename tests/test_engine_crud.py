@@ -92,6 +92,50 @@ def test_step7_empty_table_first_key_is_one(spark):
     assert res.status == 201 and res.s_no == 1
 
 
+@pytest.mark.parametrize("record", [{"team_name": "CCS"}, {"tool_name": None}])
+def test_create_rejects_missing_or_null_tool_name(seeded, record):
+    with pytest.raises(ValueError, match="tool_name"):
+        seeded.create_tool(record)
+    assert seeded.summary() == (1, 10, 10)
+
+
+def _analyzed(df):
+    return df._jdf.queryExecution().analyzed().treeString()
+
+
+@pytest.mark.parametrize("backing", ["parquet", "empty"])
+def test_uncommitted_mutations_keep_plan_flat(spark, tmp_path, backing):
+    """A session of mutations that never commits: the post-state plan
+    carries literals (no Python-evaluated LogicalRDD leaf), grows by a
+    fixed few nodes per mutation instead of re-deriving earlier keys,
+    and every returned key is the stored one."""
+    if backing == "parquet":
+        _seed(spark).table.write.parquet(str(tmp_path / "t"))
+        eng = CspToolsEngine(spark, spark.read.parquet(str(tmp_path / "t")))
+    else:
+        eng = CspToolsEngine(spark)
+    lines = [_analyzed(eng.table).count("\n")]
+    created = {}
+    for i in range(4):
+        res = eng.create_tool({"tool_name": f"flat_{i}", "login": "flat"})
+        assert res.status == 201
+        created[res.s_no] = f"flat_{i}"
+        eng = res.engine
+        lines.append(_analyzed(eng.table).count("\n"))
+    first = min(created)
+    eng = eng.update_tool(first, {"description": "u"}).engine
+    lines.append(_analyzed(eng.table).count("\n"))
+    eng = eng.delete_tool(first + 1).engine
+    lines.append(_analyzed(eng.table).count("\n"))
+
+    assert "LogicalRDD" not in _analyzed(eng.table)
+    assert all(b - a <= 8 for a, b in zip(lines, lines[1:])), lines
+    del created[first + 1]  # soft-deleted: hidden from reads
+    for s_no, name in created.items():
+        assert [r["tool_name"] for r in eng.get_tools(s_no=s_no).collect()] == [name]
+    assert eng.get_tools(s_no=first + 1).count() == 0
+
+
 def test_dashboard_datasets(seeded):
     """The five QuickSight chart datasets (dashboard PNG shapes) over
     the seeded table, cross-checked against hand counts."""

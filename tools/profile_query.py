@@ -31,28 +31,22 @@ def main() -> None:
                     help="hide stages shorter than this")
     args = ap.parse_args()
 
+    # The JVM reads the event-log settings once, at launch: pass them
+    # through PYSPARK_SUBMIT_ARGS before the first session starts, and
+    # build that session with the package's factory so the profile
+    # measures the same tuning as the bench.
     evdir = tempfile.mkdtemp(prefix="spark-events-")
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join([
+        "--conf spark.eventLog.enabled=true",
+        f"--conf spark.eventLog.dir=file://{evdir}",
+        "--conf spark.eventLog.compress=false",
+        "pyspark-shell",
+    ])
     from pyspark.sql import functions as F
 
-    cpus = os.environ["SPARK_GRAFT_CPUS"]
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile_query")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", f"file://{evdir}")
-        .config("spark.eventLog.compress", "false")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    from aws_csp_datapipeline_spark.session import get_spark
+
+    spark = get_spark(app_name="profile_query")
     spark.sparkContext.setLogLevel("ERROR")
 
     from aws_csp_datapipeline_spark.plans import registry
